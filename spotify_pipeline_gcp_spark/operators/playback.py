@@ -105,26 +105,28 @@ def bag_artists(raw: DataFrame) -> DataFrame:
     string (``:186-187``). Here the bag stays a typed array; names and
     ids are projected with ``transform`` + ``array_join``. IMPROVED:
     the bag is sorted (by artist name, then id) for determinism.
+
+    FIXED vs ref: the bag is taken once per play. The reference
+    collects over the exploded artists of every raw item, so a play
+    listed twice in one landing document (FIXTURES §F1 edge 3) got
+    every artist twice. Here each play keeps one copy of its track's
+    artist list (the least copy — deterministic if copies ever
+    differ), with no explode; plays without artists get no bag row,
+    as before.
     """
-    items = explode_items(raw)
-    exploded = items.select(
-        "played_at",
-        F.col("track.id").alias("track_id"),
-        F.explode("track.artists").alias("artist"),
+    items = explode_items(raw).where(F.size("track.artists") > 0)
+    artists = F.transform(
+        "track.artists",
+        lambda a: F.struct(
+            a["name"].alias("artist_name"),
+            a["id"].alias("artist_id"),
+            a["uri"].alias("artist_uri"),
+        ),
     )
-    bagged = (
-        exploded.groupBy("played_at", "track_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("artist.name").alias("artist_name"),
-                        F.col("artist.id").alias("artist_id"),
-                        F.col("artist.uri").alias("artist_uri"),
-                    )
-                )
-            ).alias("bagged_artists")
-        )
+    bagged = items.groupBy(
+        "played_at", F.col("track.id").alias("track_id")
+    ).agg(
+        F.array_sort(F.array_min(F.collect_list(artists))).alias("bagged_artists")
     )
     return bagged.select(
         "played_at",

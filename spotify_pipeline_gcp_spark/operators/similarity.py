@@ -113,22 +113,26 @@ def _double_base(
 # One block is ONE ``collect_list`` row, so block bytes must stay
 # task-sized as the collection grows — a cores-derived block COUNT
 # makes block SIZE grow linearly with n (unbounded at 100 TB). The
-# kernel widens float32->float64 (2x), holds two blocks per combo
-# plus the (rows_q x rows_d) float64 score matrix; 32 MB on-scan
-# keeps the per-task transients in the low hundreds of MB.
+# bound covers the packed cell, its shuffle and its Arrow bytes (the
+# kernel widens float32->float64, 2x, and holds two blocks per
+# combo). It does NOT bound the (rows_q x rows_d) float64 score slab:
+# a 32 MB block is ~131k rows at d=64, so an untiled slab grows with
+# the square of the block. Tiling the slab is separate work.
 _BLAS_BLOCK_BYTES = 32 << 20
 
 
 def _scan_bytes_est(df: DataFrame) -> int | None:
     """Optimizer-estimated input bytes for BLAS block sizing, ONLY
-    when the plan is projections/filters over leaf relations (the
-    ``_sizing_count`` guard reused): there the estimate is backed by
-    real file sizes, while derived plans (joins, aggregates,
-    generates) carry estimates wrong by orders of magnitude in either
-    direction — and a wrong block count costs B^2 useless combos or
-    an OOM-sized block. Returns None for derived frames; callers fall
-    back to the cores floor (and can pass the block count
-    explicitly). No job runs: statistics come from the file index."""
+    when the plan is projections over leaf relations: there the
+    estimate is backed by real file sizes, while derived plans (joins,
+    aggregates, generates) carry estimates wrong by orders of
+    magnitude in either direction — and a wrong block count costs B^2
+    useless combos or an OOM-sized block. Filters count as derived
+    too: without CBO a Filter's ``sizeInBytes`` is the unfiltered scan
+    size, so a selective filter would size blocks for data that never
+    arrives. Returns None for derived frames; callers fall back to the
+    cores floor (and can pass the block count explicitly). No job
+    runs: statistics come from the file index."""
     import re
 
     from spotify_pipeline_gcp_spark.operators.dedup import _SCAN_CHEAP_NODES
@@ -140,9 +144,175 @@ def _scan_bytes_est(df: DataFrame) -> int | None:
             r"^[\s:+\-]*'?([A-Za-z][A-Za-z0-9]*)", plan.treeString(), re.M
         )
     }
-    if nodes - _SCAN_CHEAP_NODES:
+    if nodes - (_SCAN_CHEAP_NODES - {"Filter"}):
         return None
     return int(plan.stats().sizeInBytes())
+
+
+# ---- packed-BLAS kernel toolkit ------------------------------------
+# The packed-BLAS and dgemm-assignment kernels share the helpers
+# below, so each decision (size, normalize, round, load a model,
+# source, pack, assign) has one implementation. Kernels that call a
+# module-level helper are pickled BY REFERENCE, so they are launched
+# through ``_map_kernel``, which ships the package to the workers.
+
+
+def _blocks_per_cell(df: DataFrame, n_cells: int = 1) -> int:
+    """Blocks per cell so the AVERAGE cell's packed block stays
+    ≤ ``_BLAS_BLOCK_BYTES`` on scan: ``ceil(scan_bytes / n_cells /
+    _BLAS_BLOCK_BYTES)``, at least 1 — and 1 for derived frames, which
+    have no trustworthy estimate (``_scan_bytes_est``). Block count
+    never changes an output row: every (query, neighbor) pair still
+    meets in exactly one combo and the rank merge is global."""
+    est = _scan_bytes_est(df)
+    return max(1, math.ceil(est / n_cells / _BLAS_BLOCK_BYTES)) if est else 1
+
+
+def _fold_unit(mat):
+    """``_unit_vectors``' chain in NumPy, bit-for-bit, over the rows of
+    a float64 matrix (raw float32 widened — exact): the norm is the
+    fold's sequential multiply-add (``p0 + 0.0`` replays the fold's
+    ``0.0 + p0`` init, one rounded add per dimension — never a
+    pairwise-summed ``np.linalg.norm``), ``np.sqrt`` and Java
+    ``Math.sqrt`` are both correctly rounded, then one exact division
+    per element. Lets kernels take RAW float32 (half the shuffle and
+    Arrow bytes) with no JVM HOF normalize."""
+    import numpy as np
+
+    p = mat * mat
+    acc = p[:, 0] + 0.0
+    for i in range(1, p.shape[1]):
+        acc = acc + p[:, i]
+    return mat / np.sqrt(acc)[:, None]
+
+
+def _quantize_rows(mat):
+    """``floor(x * 2^20 + 0.5)`` — ``_quantize_vec``'s rounding in NumPy
+    (see ``_ASSIGN_QSCALE``): integer-valued float64 whose dgemm dots
+    are exact under any accumulation order."""
+    import numpy as np
+
+    return np.floor(mat * float(_ASSIGN_QSCALE) + 0.5)
+
+
+def _collect_model(cent: DataFrame, quant: bool = False):
+    """(cids, C): a centroid frame (cid, c) collected in ascending-cid
+    order as an int64 id vector and a float64 matrix — O(k·d) model
+    state, never data. Argmax-first over these rows breaks ties to the
+    lowest cid, the fold assigners' ``max(struct(dot, -cid))`` order.
+    ``quant`` rounds C with ``_quantize_rows``."""
+    import numpy as np
+
+    rows = sorted(cent.collect(), key=lambda r: r["cid"])
+    cids = np.asarray([int(r["cid"]) for r in rows], dtype="int64")
+    mat = np.asarray([list(r["c"]) for r in rows], dtype="float64")
+    return cids, (_quantize_rows(mat) if quant else mat)
+
+
+def _kernel_source(df: DataFrame, id_col: str, vec_col: str, raw: bool) -> DataFrame:
+    """(id, v): a per-row kernel's input. ``raw``: ``vec_col`` is the
+    RAW embedding (the kernel normalizes with ``_fold_unit``) and the
+    source is repartitioned to cluster width — the exchange
+    ``_double_base`` applies, since the kernel would otherwise fuse
+    into the scan's few fat splits (r8's measured fix). Otherwise
+    ``vec_col`` already holds the JVM unit vectors."""
+    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    if raw:
+        return src.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return src
+
+
+def _pack_rows(
+    df: DataFrame, id_col: str, vec_col: str, quant: bool, raw: bool
+) -> DataFrame:
+    """(id, v) rows for packed-block search. ``raw``: the RAW float32
+    vector (the kernel widens and, for ``quant``, unit-normalizes with
+    ``_fold_unit``). Otherwise the JVM-side forms the raw path is
+    pinned bit-equal against: fold unit vectors for ``quant``, a
+    double cast for float mode (the kernel normalizes)."""
+    if raw:
+        return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    if quant:
+        return _unit_vectors(df, id_col, vec_col).select(
+            "id", F.col("u").alias("v")
+        )
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+    )
+
+
+def _cell_combos(cells: DataFrame, keys: list[str], n_sub: int = 1) -> DataFrame:
+    """(q_items, d_items) for a cell SELF-search over (keys..., id, v)
+    rows: each cell packs into one ``collect_list`` block scored
+    against itself, so candidate generation needs no join — the cell
+    IS the block. ``n_sub`` > 1 sub-splits every cell by id-hash into
+    n_sub blocks joined pairwise on the cell key (n_sub² combos per
+    cell) for cells that outgrow a task; every (query, neighbor) pair
+    still meets in exactly one combo, so output rows are unchanged."""
+    item = F.collect_list(F.struct("id", "v")).alias("items")
+    if n_sub <= 1:
+        packed = cells.groupBy(*keys).agg(item)
+        return packed.select(
+            F.col("items").alias("q_items"), F.col("items").alias("d_items")
+        )
+    cells = cells.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
+    packed = cells.groupBy(*keys, "sub").agg(item)
+    return (
+        packed.alias("a")
+        .join(packed.alias("b"), [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys])
+        .select(F.col("a.items").alias("q_items"), F.col("b.items").alias("d_items"))
+    )
+
+
+def _map_kernel(src: DataFrame, kernel, schema: str) -> DataFrame:
+    """``src.mapInPandas(kernel, schema)`` for a kernel that calls this
+    module's helpers: cloudpickle ships those by reference, so the
+    package must be importable on the Python workers whatever the
+    driver's cwd — shipped once per session."""
+    from spotify_pipeline_gcp_spark.pyfiles import ensure_package_on_workers
+
+    ensure_package_on_workers(src.sparkSession)
+    return src.mapInPandas(kernel, schema=schema)
+
+
+def _assign_blas(
+    src: DataFrame, models: dict, quant: bool, raw: bool, keep_v: bool = False
+) -> DataFrame:
+    """(id, [v,] <cid columns>): per-batch argmax-centroid assignment
+    over an (id, v) source — THE dgemm assigner. ``models`` maps each
+    output column to (column slice, cids, C) from ``_collect_model``:
+    one full-width entry for a flat quantizer, two half slices for the
+    IMI. ``raw``: v is the raw embedding, unit-normalized in-kernel
+    (``_fold_unit``); ``quant``: rows round with ``_quantize_rows``
+    (C must be quantized too), so every dot is an exact integer and
+    the argmax is bit-identical to the quantized fold
+    (``_argmax_assign_quant``). ``np.argmax`` takes the first maximum:
+    ties go to the lowest cid. ``keep_v`` passes v through untouched
+    for the packed search blocks downstream."""
+
+    def _assign(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            U = np.vstack(pdf["v"].to_numpy()).astype("float64", copy=False)
+            if raw:
+                U = _fold_unit(U)
+            if quant:
+                U = _quantize_rows(U)
+            cols = {"id": pdf["id"]}
+            if keep_v:
+                cols["v"] = pdf["v"]
+            for name, (sl, cids, C) in models.items():
+                cols[name] = cids[np.argmax(U[:, sl] @ C.T, axis=1)]
+            yield pd.DataFrame(cols)
+
+    v_field = f"v {src.schema['v'].dataType.simpleString()}, " if keep_v else ""
+    cid_fields = ", ".join(f"{name} long" for name in models)
+    return _map_kernel(src, _assign, f"id long, {v_field}{cid_fields}")
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -483,10 +653,6 @@ def cosine_topk_blas(
     emitted values are bit-identical to the ``raw=False`` JVM-side
     cast/normalize paths, pinned by pytest.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window as W
-
     if n_blocks is None:
         # B² combos saturate the cluster already at B ≈ √(2·cores);
         # replication cost (2·B·|collection|) and per-combo unpack
@@ -500,25 +666,12 @@ def cosine_topk_blas(
         # collections keep blocks bounded. Derived frames (no stats)
         # keep the cores floor — pass ``n_blocks`` explicitly there.
         cores = df.sparkSession.sparkContext.defaultParallelism
-        est = _scan_bytes_est(df)
         n_blocks = max(
-            4,
-            math.ceil(math.sqrt(2 * cores)),
-            math.ceil(est / _BLAS_BLOCK_BYTES) if est else 0,
-        )
-    if raw:
-        base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    elif quant:
-        base = _unit_vectors(df, id_col, vec_col).select(
-            "id", F.col("u").alias("v")
-        )
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+            4, math.ceil(math.sqrt(2 * cores)), _blocks_per_cell(df)
         )
     packed = (
-        base.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(n_blocks)))
+        _pack_rows(df, id_col, vec_col, quant, raw)
+        .withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(n_blocks)))
         .groupBy("blk")
         .agg(F.collect_list(F.struct("id", "v")).alias("items"))
     )
@@ -545,9 +698,7 @@ def _blas_topk_from_combos(
     pre-normalized from the JVM fold (float64 across the shuffle and
     Arrow); with ``raw=True`` the rows are the RAW float32 embeddings
     and the kernel replays ``_unit_vectors``'s chain itself bit-exactly
-    (exact float→double widening, sequential-fold norm, ``sqrt``, one
-    exact division per element — the ``assign_clusters_quant_blas``
-    raw-path argument), which halves the packed blocks' shuffle and
+    (``_fold_unit``), which halves the packed blocks' shuffle and
     Arrow bytes and removes the JVM HOF normalize entirely."""
     import numpy as np
     import pandas as pd
@@ -559,15 +710,7 @@ def _blas_topk_from_combos(
         ids = np.fromiter((r["id"] for r in items), dtype="int64", count=len(items))
         mat = np.stack([np.asarray(r["v"], dtype="float64") for r in items])
         if quant:
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = mat * mat
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                mat = mat / np.sqrt(acc)[:, None]
-            return ids, np.floor(mat * qscale + 0.5)
+            return ids, _quantize_rows(_fold_unit(mat) if raw else mat)
         return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
     def kernel(batches):
@@ -609,8 +752,8 @@ def _blas_topk_from_combos(
                             rows.append((int(q_ids[r]), int(d_ids[j]), float(val)))
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    partials = combos.mapInPandas(
-        kernel, schema="query_id long, neighbor_id long, cosine double"
+    partials = _map_kernel(
+        combos, kernel, "query_id long, neighbor_id long, cosine double"
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return partials.withColumn(
@@ -664,18 +807,9 @@ def cosine_topk_bucketed_blas(
     normalizes bit-exactly in NumPy; ``raw=False`` keeps the JVM-side
     cast/normalize paths (pinned bit-equal by pytest).
     """
-    if raw:
-        base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    elif quant:
-        base = _unit_vectors(df, id_col, vec_col).select(
-            "id", F.col("u").alias("v")
-        )
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-    base = base.withColumn("bucket", sign_bucket("v", n_bits))
+    base = _pack_rows(df, id_col, vec_col, quant, raw).withColumn(
+        "bucket", sign_bucket("v", n_bits)
+    )
     if max_bucket is not None:
         # the sized shape's hot-bucket cap (qs13's r10 move): a dense
         # region's bucket is dropped BEFORE packing, which bounds both
@@ -684,33 +818,10 @@ def cosine_topk_bucketed_blas(
         # is a quadratic dgemm on one task
         base = drop_hot_buckets(base, max_bucket)
     if n_sub is None:
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / (1 << n_bits) / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        base = base.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = base.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
-        )
-    else:
-        packed = base.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k, quant=quant, raw=raw)
+        n_sub = _blocks_per_cell(df, 1 << n_bits)
+    return _blas_topk_from_combos(
+        _cell_combos(base, ["bucket"], n_sub), k, quant=quant, raw=raw
+    )
 
 
 def sign_bucket_pairs_blas(
@@ -769,17 +880,11 @@ def sign_bucket_pairs_blas(
 
     if n_bits is None:
         n_bits = sign_bits_for(df.count() if n_docs is None else n_docs)
-    if raw:
-        base = df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("u")
-        ).withColumn("bucket", sign_bucket("u", n_bits))
-    else:
-        base = _unit_vectors(df, id_col, vec_col).withColumn(
-            "bucket", sign_bucket("u", n_bits)
-        )
-    base = drop_hot_buckets(base)
-    packed = base.groupBy("bucket").agg(
-        F.collect_list(F.struct("id", "u")).alias("items")
+    base = _pack_rows(df, id_col, vec_col, quant=True, raw=raw).withColumn(
+        "bucket", sign_bucket("v", n_bits)
+    )
+    packed = drop_hot_buckets(base).groupBy("bucket").agg(
+        F.collect_list(F.struct("id", "v")).alias("items")
     )
     qscale = float(_ASSIGN_QSCALE)
 
@@ -794,17 +899,9 @@ def sign_bucket_pairs_blas(
                     (r["id"] for r in items), dtype="int64", count=m
                 )
                 mat = np.stack(
-                    [np.asarray(r["u"], dtype="float64") for r in items]
+                    [np.asarray(r["v"], dtype="float64") for r in items]
                 )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = mat * mat
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    mat = mat / np.sqrt(acc)[:, None]
-                qm = np.floor(mat * qscale + 0.5)
+                qm = _quantize_rows(_fold_unit(mat) if raw else mat)
                 sims = (qm @ qm.T) / (qscale * qscale)
                 iu, ju = np.triu_indices(m, k=1)
                 keep = sims[iu, ju] >= threshold
@@ -821,14 +918,7 @@ def sign_bucket_pairs_blas(
                 rows, columns=["id_a", "id_b", "cosine_q"]
             )
 
-    return packed.mapInPandas(
-        kernel, schema="id_a long, id_b long, cosine_q double"
-    )
-
-
-# Backwards-compatible name; the driver-collect implementation it
-# once pointed to is gone (it was a driver-memory cliff).
-cosine_topk_pandas = cosine_topk_blas
+    return _map_kernel(packed, kernel, "id_a long, id_b long, cosine_q double")
 
 
 # Fixed-point scale for deterministic distributed mean aggregation:
@@ -1249,73 +1339,41 @@ def ivfpq_assign_encode_quant_blas(
     serving tables stay float-trained and 1e9-quantized exactly as
     before — only WHICH code represents each subvector moves (by at
     most one quantization-boundary neighbor), and the oracle replays
-    the same quantized selection. Callers must
-    ``ensure_package_on_workers`` first.
+    the same quantized selection.
 
     ``raw=True``: ``pts`` is the RAW table (``u_col`` names the raw
-    embedding column) and the kernel replays ``_unit_vectors``'s
-    chain bit-exactly before quantizing (the
-    ``assign_clusters_quant_blas`` raw-path argument) — no JVM HOF
-    normalize, float32 across Arrow; emitted (cid, codes) integers
-    are bit-identical."""
+    embedding column) and the kernel unit-normalizes it with
+    ``_fold_unit`` before quantizing — no JVM HOF normalize, float32
+    across Arrow; emitted (cid, codes) integers are bit-identical."""
     import numpy as np
 
-    q = float(_ASSIGN_QSCALE)
-    crows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
-    C = np.floor(np.asarray([c for _, c in crows], dtype="float64") * q + 0.5)
-    cids = np.asarray([cid for cid, _ in crows], dtype="int64")
+    cids, C = _collect_model(cent, quant=True)
     subs = []
     for s in range(m):
-        brows = sorted(
-            (int(r["cid"]), list(r["c"])) for r in books[s].collect()
-        )
-        Bq = np.floor(
-            np.asarray([c for _, c in brows], dtype="float64") * q + 0.5
-        )
-        bids = np.asarray([cid for cid, _ in brows], dtype="int64")
+        bids, Bq = _collect_model(books[s], quant=True)
         subs.append((bids, Bq, (Bq * Bq).sum(axis=1)))
 
     def _run(batches):
-        import numpy as _np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.stack(
-                [_np.asarray(u, dtype="float64") for u in pdf[u_col]]
-            )
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = V * V
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                V = V / _np.sqrt(acc)[:, None]
-            U = _np.floor(V * q + 0.5)
-            cells = cids[_np.argmax(U @ C.T, axis=1)]
-            codes = _np.empty((len(pdf), m), dtype="int64")
+            V = np.vstack(pdf["v"].to_numpy()).astype("float64", copy=False)
+            U = _quantize_rows(_fold_unit(V) if raw else V)
+            cells = cids[np.argmax(U @ C.T, axis=1)]
+            codes = np.empty((len(pdf), m), dtype="int64")
             for s, (bids, Bq, qcc) in enumerate(subs):
                 Us = U[:, s * d_sub : (s + 1) * d_sub]
                 codes[:, s] = bids[
-                    _np.argmax(2.0 * (Us @ Bq.T) - qcc[None, :], axis=1)
+                    np.argmax(2.0 * (Us @ Bq.T) - qcc[None, :], axis=1)
                 ]
             yield pd.DataFrame(
-                {"id": pdf[id_col], "cid": cells, "codes": codes.tolist()}
+                {"id": pdf["id"], "cid": cells, "codes": codes.tolist()}
             )
 
-    src = pts.select(
-        F.col(id_col).alias(id_col), F.col(u_col).alias(u_col)
-    )
-    if raw:
-        # the cluster-width repartition _double_base would have
-        # applied — the fused n·(k + m·k_pq) kernel must not inherit
-        # a few fat scan splits
-        src = src.repartition(
-            pts.sparkSession.sparkContext.defaultParallelism
-        )
-    return src.mapInPandas(_run, schema="id long, cid long, codes array<long>")
+    src = _kernel_source(pts, id_col, u_col, raw)
+    return _map_kernel(src, _run, "id long, cid long, codes array<long>")
 
 
 def kmeans_centroids_quant_on(
@@ -1389,59 +1447,19 @@ def assign_clusters_quant_blas(
     reordered accumulation flips near-ties at ulp level and forced
     consumers to rows-only. Ties break to the
     lowest cid (argmax-first over ascending-cid rows — the fold's
-    ``max(struct(dot, -cid))`` order). Callers must
-    ``ensure_package_on_workers`` first.
+    ``max(struct(dot, -cid))`` order); the kernel is ``_assign_blas``.
 
     ``raw=True``: ``pts`` is the RAW table (``u_col`` names the raw
     embedding column) and the kernel computes the unit vectors itself
-    — bit-exactly replaying ``_unit_vectors``'s chain (exact
-    float→double cast, sequential-fold norm, ``sqrt``, one exact
-    division per element — the ``_topn_probe_ranks_halves_blas``
-    argument) before quantizing. This removes the JVM HOF normalize
-    (two transient array<double> allocations per corpus row — 182 s
-    of GC in the 56 s manifest-build assignment stage at the 2 M
-    rung) and ships float32 across Arrow instead of float64; it adds
-    the cluster-width repartition ``_double_base`` would have
-    applied, since the caller's ``_unit_vectors`` is skipped."""
-    import numpy as np
-
-    q = float(_ASSIGN_QSCALE)
-    rows = sorted((int(r["cid"]), list(r["c"])) for r in cent.collect())
-    C = np.floor(
-        np.asarray([c for _, c in rows], dtype="float64") * q + 0.5
-    )
-    cids = np.asarray([cid for cid, _ in rows], dtype="int64")
-
-    def _assign(batches):
-        import numpy as _np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.vstack(pdf[u_col].to_numpy()).astype(
-                "float64", copy=False
-            )
-            if raw:
-                # _unit_vectors' bits: sequential fold norm, then one
-                # exact division per element
-                p = V * V
-                acc = p[:, 0] + 0.0
-                for i in range(1, p.shape[1]):
-                    acc = acc + p[:, i]
-                V = V / _np.sqrt(acc)[:, None]
-            U = _np.floor(V * q + 0.5)
-            best = cids[_np.argmax(U @ C.T, axis=1)]
-            yield pd.DataFrame({"id": pdf[id_col], "cid": best})
-
-    src = pts.select(
-        F.col(id_col).alias(id_col), F.col(u_col).alias(u_col)
-    )
-    if raw:
-        src = src.repartition(
-            pts.sparkSession.sparkContext.defaultParallelism
-        )
-    return src.mapInPandas(_assign, schema="id long, cid long")
+    with ``_fold_unit`` before quantizing. This removes the JVM HOF
+    normalize (two transient array<double> allocations per corpus row
+    — 182 s of GC in the 56 s manifest-build assignment stage at the
+    2 M rung) and ships float32 across Arrow instead of float64; the
+    source takes the cluster-width repartition ``_double_base`` would
+    have applied (``_kernel_source``)."""
+    src = _kernel_source(pts, id_col, u_col, raw)
+    model = (slice(None), *_collect_model(cent, quant=True))
+    return _assign_blas(src, {"cid": model}, quant=True, raw=raw)
 
 
 def cosine_topk_kmeans(
@@ -1701,7 +1719,6 @@ def _topn_probe_ranks_halves(
     cent2: DataFrame,
     d_half: int,
     nprobe: int,
-    work_rows: int | None = None,
 ) -> DataFrame:
     """(id, t1, t2): BOTH halves' top-``nprobe`` probe lists from ONE
     scored stream — ``imi_assign``'s tagged-union trick generalized
@@ -1716,24 +1733,15 @@ def _topn_probe_ranks_halves(
     stageprof measured each separate half-chain at ~80 s on 2 M
     vectors). ``t[0]`` is the assigned cell (probe rank 1).
 
-    ``work_rows`` (= corpus rows × 2·k_each, which callers already
-    know — no counting job) pre-widens the point stream so the
-    tagged scored slice per task stays sort/spill-friendly (see
-    ``_widen_for_scoring``): the union DOUBLES per-task scored rows
-    vs a separate per-half pass, which is precisely the qs25 r11
-    partial-SortAggregate OOM class — the unwidened tagged form died
-    at the 2 M-vector rung in 4 g where the two separate chains
-    (half the slice each) had survived."""
+    This fold form is the bit-exact reference the vectorized
+    ``_topn_probe_ranks_halves_blas`` is pinned against (pytest)."""
     c1 = cent1.select(F.lit(1).alias("q"), "cid", "c")
     c2 = cent2.select(F.lit(2).alias("q"), "cid", "c")
     cents = c1.unionByName(c2)
-    halved = _widen_for_scoring(
-        pts.select(
-            "id",
-            F.slice("u", 1, d_half).alias("u1"),
-            F.slice("u", d_half + 1, d_half).alias("u2"),
-        ),
-        work_rows,
+    halved = pts.select(
+        "id",
+        F.slice("u", 1, d_half).alias("u1"),
+        F.slice("u", d_half + 1, d_half).alias("u2"),
     )
     scored = halved.crossJoin(F.broadcast(cents)).select(
         "id",
@@ -1765,7 +1773,6 @@ def _topn_probe_ranks_halves_blas(
     d_half: int,
     nprobe: int,
     with_u: bool = False,
-    cids_only: bool = False,
     raw: tuple[str, str] | None = None,
     emit_raw: bool = False,
 ) -> DataFrame:
@@ -1808,24 +1815,9 @@ def _topn_probe_ranks_halves_blas(
     re-ran scan + unit-normalize + an id-keyed join sort per
     consumer: the 52 s + 43 s stages of the 102 s rung row).
 
-    ``cids_only=True`` emits t1/t2 as plain ``array<bigint>`` probe
-    cid lists (rank order) instead of (nd, cid) structs — identical
-    cid selection, narrower payload. **A/B measured and NOT adopted**
-    (session 4, 5 M rung, same data, fresh 4 g JVMs): struct form
-    61.4/70.4/74.5 s vs cid-only 77.9/82.4 s — the hypothesis that
-    per-row dict building + list<struct> Arrow conversion dominated
-    the materialization stage did not hold (the stage's cost is the
-    checkpoint + packing-exchange serialization of ``u``, which both
-    forms carry). qs28 keeps the struct form; the flag stays for the
-    measurement's reproducibility and the pytest pin.
-
     ``raw=(id_col, vec_col)``: ``pts`` is the RAW table and the
-    kernel computes the unit vectors itself, bit-exactly replaying
-    ``_unit_vectors``'s chain — cast float→double (exact), norm =
-    ``sqrt(fold(zip_with(v, v, x*y), 0.0, acc+v))`` as the same
-    sequential multiply-add (``np.sqrt`` and Java ``Math.sqrt`` are
-    both IEEE correctly-rounded), then one exact division per
-    element. This removes the JVM HOF normalize (two transient
+    kernel computes the unit vectors itself, bit-exactly
+    (``_fold_unit``). This removes the JVM HOF normalize (two transient
     array<double> allocations per row — the GC source of the
     materialization stage) and ships float32 across Arrow instead of
     float64 (half the boundary bytes); the emitted ``u`` doubles are
@@ -1840,14 +1832,10 @@ def _topn_probe_ranks_halves_blas(
     import numpy as np
     import pandas as pd
 
-    def _model(cent):
-        rows = sorted(cent.collect(), key=lambda r: r["cid"])
-        cids = np.array([int(r["cid"]) for r in rows], dtype="int64")
-        mat = np.array([list(r["c"]) for r in rows], dtype="float64")
-        return cids, mat
-
-    cids1, c1m = _model(cent1)
-    cids2, c2m = _model(cent2)
+    if emit_raw and (raw is None or not with_u):
+        raise ValueError("emit_raw requires raw input and with_u")
+    cids1, c1m = _collect_model(cent1)
+    cids2, c2m = _collect_model(cent2)
     take1, take2 = min(nprobe, len(cids1)), min(nprobe, len(cids2))
     # per-chunk transient: rows × (k1 + k2) float64 score cells ≈ 32 MB
     chunk = max(1, 4_000_000 // max(len(cids1) + len(cids2), 1))
@@ -1868,73 +1856,41 @@ def _topn_probe_ranks_halves_blas(
     def _top(u_mat, cids, c_mat, take):
         nd = -_fold_dots(u_mat, c_mat)
         idx = np.argsort(_tok(nd), axis=1, kind="stable")[:, :take]
-        sel = cids[idx]
-        if cids_only:
-            return list(sel)  # one int64 ndarray per row → list<bigint>
         vals = np.take_along_axis(nd, idx, axis=1)
         return [
             [{"nd": float(v), "cid": int(c)} for v, c in zip(vr, cr)]
-            for vr, cr in zip(vals, sel)
+            for vr, cr in zip(vals, cids[idx])
         ]
 
     def kernel(batches):
         for pdf in batches:
             for lo in range(0, len(pdf), chunk):
                 part = pdf.iloc[lo : lo + chunk]
-                cols = {"id": part["id"].to_numpy()}
+                v = part["v"].to_numpy()
+                u_mat = np.vstack(v).astype("float64", copy=False)
                 if raw is not None:
-                    v_mat = np.vstack(part["v"].to_numpy()).astype("float64")
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = v_mat * v_mat
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    u_mat = v_mat / np.sqrt(acc)[:, None]
-                    if with_u:
-                        # emit_raw: float32 passthrough, no numeric
-                        # conversion — the scoring kernel re-derives u
-                        cols["u"] = (
-                            part["v"].to_numpy()
-                            if emit_raw
-                            else list(u_mat)
-                        )
-                else:
-                    u_mat = np.vstack(part["u"].to_numpy()).astype(
-                        "float64", copy=False
-                    )
-                    if with_u:
-                        # passthrough, no numeric conversion — exact
-                        cols["u"] = part["u"].to_numpy()
+                    u_mat = _fold_unit(u_mat)
+                cols = {"id": part["id"].to_numpy()}
+                if with_u:
+                    # passthrough, no numeric conversion — exact (the
+                    # raw float32 vector under emit_raw: the scoring
+                    # kernel re-derives u)
+                    cols["u"] = list(u_mat) if raw and not emit_raw else v
                 cols["t1"] = _top(u_mat[:, :d_half], cids1, c1m, take1)
                 cols["t2"] = _top(u_mat[:, d_half:], cids2, c2m, take2)
                 yield pd.DataFrame(cols)
 
-    if emit_raw and (raw is None or not with_u):
-        raise ValueError("emit_raw requires raw input and with_u")
     u_type = (
         pts.schema[raw[1]].dataType.simpleString()
         if emit_raw
         else "array<double>"
     )
     u_field = f"u {u_type}, " if with_u else ""
-    t_type = (
-        "array<bigint>" if cids_only else "array<struct<nd: double, cid: bigint>>"
-    )
-    if raw is not None:
-        id_col, vec_col = raw
-        # same cluster-width repartition _double_base applies: the
-        # parquet scan splits into few large partitions, and the
-        # kernel fuses into the scan stage — the skinny float32
-        # exchange buys full-width parallelism (r8's measured fix)
-        src = pts.repartition(
-            pts.sparkSession.sparkContext.defaultParallelism
-        ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    else:
-        src = pts.select("id", "u")
-    return src.mapInPandas(
-        kernel,
-        schema=f"id bigint, {u_field}t1 {t_type}, t2 {t_type}",
+    t_type = "array<struct<nd: double, cid: bigint>>"
+    id_col, vec_col = raw or ("id", "u")
+    src = _kernel_source(pts, id_col, vec_col, raw is not None)
+    return _map_kernel(
+        src, kernel, f"id bigint, {u_field}t1 {t_type}, t2 {t_type}"
     )
 
 
@@ -2075,93 +2031,26 @@ def cosine_topk_kmeans_blas(
             k=n_clusters,
             n_iter=n_iter,
         )
-    pack_raw = raw and blas_assign
     if blas_assign:
-        import numpy as np
-
-        qscale = float(_ASSIGN_QSCALE)
-        rows = sorted((r["cid"], list(r["c"])) for r in cent.collect())
-        C = np.asarray([c for _, c in rows], dtype="float64")
-        if quant:
-            # quantized-exact assignment dots (the
-            # assign_clusters_quant_blas arithmetic, keeping u in the
-            # output row for the packed search blocks)
-            C = np.floor(C * qscale + 0.5)
-        cids = np.asarray([cid for cid, _ in rows], dtype="int64")
-        if raw:
-            vec_t = df.schema[vec_col].dataType.simpleString()
-            # same cluster-width repartition _double_base applies —
-            # the n·k kernel must not fuse into a few fat scan splits
-            pts = df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism
-            ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("u"))
-        else:
-            vec_t = "array<double>"
-            pts = _unit_vectors(df, id_col, vec_col)
-
-        def _assign(batches):
-            import numpy as _np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                U = _np.stack(
-                    [_np.asarray(u, dtype="float64") for u in pdf["u"]]
-                )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = U * U
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    U = U / _np.sqrt(acc)[:, None]
-                if quant:
-                    U = _np.floor(U * qscale + 0.5)
-                best = cids[_np.argmax(U @ C.T, axis=1)]
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "v": pdf["u"], "bucket": best}
-                )
-
-        asg = pts.mapInPandas(
-            _assign, schema=f"id long, v {vec_t}, bucket long"
+        src = (
+            _kernel_source(df, id_col, vec_col, raw=True)
+            if raw
+            else _kernel_source(_unit_vectors(df, id_col, vec_col), "id", "u", False)
         )
+        model = (slice(None), *_collect_model(cent, quant))
+        cells = _assign_blas(src, {"cid": model}, quant, raw, keep_v=True)
     else:
-        asg = assign_clusters(df, cent, id_col, vec_col).select(
-            "id", F.col("u").alias("v"), F.col("cid").alias("bucket")
+        cells = assign_clusters(df, cent, id_col, vec_col).select(
+            "id", F.col("u").alias("v"), "cid"
         )
     if n_sub is None:
-        # expected cell bytes = scan_bytes / k; sub-split so the
-        # average packed block stays task-sized (see
-        # cosine_topk_bucketed_blas — output rows are invariant)
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / n_clusters / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        asg = asg.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = asg.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
-        )
-    else:
-        packed = asg.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k_neighbors, quant=quant, raw=pack_raw)
+        n_sub = _blocks_per_cell(df, n_clusters)
+    return _blas_topk_from_combos(
+        _cell_combos(cells, ["cid"], n_sub),
+        k_neighbors,
+        quant=quant,
+        raw=raw and blas_assign,
+    )
 
 
 
@@ -2190,13 +2079,7 @@ def kmeans_centroids_blas(
     spark = df.sparkSession
     ensure_package_on_workers(spark)
     pts = _unit_vectors(df, id_col, vec_col)
-    init = _seeded_init(pts, k).collect()
-    cent = np.stack(
-        [
-            np.asarray(r["c"], dtype="float64")
-            for r in sorted(init, key=lambda r: r["cid"])
-        ]
-    )
+    _, cent = _collect_model(_seeded_init(pts, k))
 
     d = cent.shape[1]
     for _ in range(n_iter):
@@ -3129,54 +3012,28 @@ def cosine_topk_kmeans_blas_trained(
     quantized-exact packed search via ``cosine_topk_kmeans_blas``:
     the ONLY fully-dgemm pipeline in the family (train + assign +
     search), and every score an integer the SQL oracle replays, so
-    it is hash-verified end to end."""
-    spark = df.sparkSession
+    it is hash-verified end to end. Both modes search through
+    ``cosine_topk_kmeans_blas``."""
     if quant:
-        pts = _unit_vectors(df, id_col, vec_col)
-        cent = kmeans_centroids_quant_on(pts, k=n_clusters, n_iter=n_iter)
-        return cosine_topk_kmeans_blas(
-            df,
-            k_neighbors=k_neighbors,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_sub=n_sub,
-            blas_assign=True,
-            cent=cent,
-            quant=True,
-        )
-    cent_rows = kmeans_centroids_blas(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
-    cent = spark.createDataFrame(cent_rows, "cid long, c array<double>")
-    asg = assign_clusters(df, cent, id_col, vec_col).select(
-        "id", F.col("u").alias("v"), F.col("cid").alias("bucket")
-    )
-    if n_sub is None:
-        est = _scan_bytes_est(df)
-        n_sub = (
-            max(1, math.ceil(est / n_clusters / _BLAS_BLOCK_BYTES))
-            if est
-            else 1
-        )
-    if n_sub > 1:
-        asg = asg.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(n_sub)))
-        packed = asg.groupBy("bucket", "sub").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
-        )
-        combos = (
-            packed.alias("a")
-            .join(packed.alias("b"), F.col("a.bucket") == F.col("b.bucket"))
-            .select(
-                F.col("a.items").alias("q_items"),
-                F.col("b.items").alias("d_items"),
-            )
+        cent = kmeans_centroids_quant_on(
+            _unit_vectors(df, id_col, vec_col), k=n_clusters, n_iter=n_iter
         )
     else:
-        packed = asg.groupBy("bucket").agg(
-            F.collect_list(F.struct("id", "v")).alias("items")
+        cent = df.sparkSession.createDataFrame(
+            kmeans_centroids_blas(df, id_col, vec_col, k=n_clusters, n_iter=n_iter),
+            "cid long, c array<double>",
         )
-        combos = packed.select(
-            F.col("items").alias("q_items"), F.col("items").alias("d_items")
-        )
-    return _blas_topk_from_combos(combos, k_neighbors)
+    return cosine_topk_kmeans_blas(
+        df,
+        k_neighbors=k_neighbors,
+        id_col=id_col,
+        vec_col=vec_col,
+        n_clusters=n_clusters,
+        n_sub=n_sub,
+        blas_assign=quant,
+        cent=cent,
+        quant=quant,
+    )
 
 
 def cosine_topk_imi_multiprobe_blas(
@@ -3190,8 +3047,6 @@ def cosine_topk_imi_multiprobe_blas(
     train_df: DataFrame | None = None,
     cents: tuple[DataFrame, DataFrame] | None = None,
     quant: bool = False,
-    work_rows: int | None = None,
-    probe_kernel: bool = True,
     raw: bool = True,
 ) -> DataFrame:
     """Multiprobe IMI at BLAS throughput — the last cell of the
@@ -3216,92 +3071,55 @@ def cosine_topk_imi_multiprobe_blas(
     oracle-replayed — qs24's chain) and scores the blocks with the
     QUANTIZED-EXACT kernel, making the query hash-verified. ``cents``
     accepts the pre-trained half-quantizers (qs28 passes the memoized
-    shared 'imi:' model)."""
+    shared 'imi:' model).
+
+    ``raw=True`` (default): the probe kernel takes the RAW float32
+    vectors and passes them through to the packed blocks, whose
+    scoring kernel re-normalizes bit-exactly; ``raw=False`` packs the
+    kernel's float64 unit vectors (pinned bit-equal by pytest)."""
     from pyspark import StorageLevel
 
-    pts = _unit_vectors(df, id_col, vec_col)
     h = _half_dim(df, vec_col)
     if cents is not None:
         cent1, cent2 = cents
     else:
-        tpts = (
-            _unit_vectors(train_df, id_col, vec_col)
-            if train_df is not None
-            else pts
+        tpts = _unit_vectors(
+            train_df if train_df is not None else df, id_col, vec_col
         )
         cent1, cent2 = kmeans_centroids_on_halves(
             tpts, h, k=k_each, n_iter=n_iter
         )
-    # ONE fold-scoring chain total (r14 — the qs28 stageprof
-    # attributed ~280 s of the 377.8 s rung row to THREE scoring
-    # chains: imi_assign's pass plus two separate probe passes, each
-    # rebuilding the scan→unit-vector map; an intermediate two-chain
-    # shape still paid 2×~80 s): both halves' top-n probe lists come
-    # from ONE scored pass, and the assignment is ``t[0]`` (probe
-    # rank 1 — the ranking's (−dot, cid) order is identical to the
-    # assignment argmax's, ``_topn_probes``' documented contract).
-    # Session 4 moved that pass from the tagged-union crossJoin+fold
-    # (``_topn_probe_ranks_halves`` — kept as the A/B-pinned fold
-    # form, ``probe_kernel=False``) to its BIT-EXACT vectorized twin
-    # (``_topn_probe_ranks_halves_blas`` — same double bits, same tie
-    # order, no exchange, no ``work_rows`` sorter guard needed).
-    # The per-id probe row (id + two ≤nprobe struct arrays) is
-    # consumed twice (all rank combos → query side, rank-1 pair →
-    # database side); a DISK_ONLY localCheckpoint pins it so neither
-    # consumer re-runs the scoring. Output is bit-identical to the
-    # imi_assign shape (same dots, same tie order) — the oracle and
-    # the qs24 agreement pytest are unchanged.
-    if probe_kernel:
-        # the kernel emits u alongside the probe lists (bit-lossless
-        # Arrow passthrough), so BOTH packing consumers read (id, u,
-        # probes) straight off the one checkpoint — no pts join-back,
-        # no second/third corpus scan + re-normalize (session 4: the
-        # two join-side stages were 52 s + 43 s of the 102 s rung row)
-        both = _topn_probe_ranks_halves_blas(
-            df,
-            cent1,
-            cent2,
-            h,
-            nprobe_each,
-            with_u=True,
-            cids_only=False,
-            # the kernel unit-normalizes bit-exactly itself: no JVM HOF
-            # pass, float32 across the Arrow boundary (see the helper)
-            raw=(id_col, vec_col),
-            # raw: u passes through as the RAW float32 vector, so the
-            # checkpoint and both packing exchanges carry half the
-            # bytes; the scoring kernel re-normalizes bit-exactly
-            emit_raw=raw,
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        d_side = both.select(
-            "id",
-            "u",
-            F.col("t1")[0]["cid"].alias("cid1"),
-            F.col("t2")[0]["cid"].alias("cid2"),
-        )
-        q_side = (
-            both.select("id", "u", F.explode("t1").alias("p1"), "t2")
-            .select("id", "u", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2"))
-            .select("id", "u", "cid1", F.col("p2.cid").alias("cid2"))
-        )
-    else:
-        both = _topn_probe_ranks_halves(
-            pts, cent1, cent2, h, nprobe_each, work_rows=work_rows
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        d_ids = both.select(
-            "id",
-            F.col("t1")[0]["cid"].alias("cid1"),
-            F.col("t2")[0]["cid"].alias("cid2"),
-        )
-        d_side = pts.join(d_ids, "id")
-        q_keys = (
-            both.select("id", F.explode("t1").alias("p1"), "t2")
-            .select(
-                "id", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2")
-            )
-            .select("id", "cid1", F.col("p2.cid").alias("cid2"))
-        )
-        q_side = pts.join(q_keys, "id")
+    # ONE scoring pass total (r14 — the qs28 stageprof attributed
+    # ~280 s of the 377.8 s rung row to THREE fold scoring chains):
+    # both halves' top-n probe lists come from the bit-exact
+    # vectorized probe kernel (``_topn_probe_ranks_halves_blas`` —
+    # same double bits and tie order as the fold, no exchange), and
+    # the assignment is ``t[0]`` (probe rank 1 — ``_topn_probes``'
+    # documented contract). The kernel emits the vector alongside the
+    # probe lists, so BOTH packing consumers (all rank combos → query
+    # side, rank-1 pair → database side) read (id, u, probes) off one
+    # DISK_ONLY localCheckpoint — no re-scoring, no pts join-back.
+    both = _topn_probe_ranks_halves_blas(
+        df,
+        cent1,
+        cent2,
+        h,
+        nprobe_each,
+        with_u=True,
+        raw=(id_col, vec_col),
+        emit_raw=raw,
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    d_side = both.select(
+        "id",
+        "u",
+        F.col("t1")[0]["cid"].alias("cid1"),
+        F.col("t2")[0]["cid"].alias("cid2"),
+    )
+    q_side = (
+        both.select("id", "u", F.explode("t1").alias("p1"), "t2")
+        .select("id", "u", F.col("p1.cid").alias("cid1"), F.explode("t2").alias("p2"))
+        .select("id", "u", "cid1", F.col("p2.cid").alias("cid2"))
+    )
     d_packed = d_side.groupBy("cid1", "cid2").agg(
         F.collect_list(F.struct(F.col("id"), F.col("u").alias("v"))).alias(
             "d_items"
@@ -3315,9 +3133,7 @@ def cosine_topk_imi_multiprobe_blas(
     combos = q_packed.join(d_packed, ["cid1", "cid2"]).select(
         "q_items", "d_items"
     )
-    return _blas_topk_from_combos(
-        combos, k_neighbors, quant=quant, raw=raw and probe_kernel
-    )
+    return _blas_topk_from_combos(combos, k_neighbors, quant=quant, raw=raw)
 
 
 def cosine_topk_imi_blas(
@@ -3375,7 +3191,6 @@ def cosine_topk_imi_blas(
             "quant exists to make the dgemm route hash-verifiable"
         )
     h = _half_dim(df, vec_col)
-    pack_raw = raw and blas_assign
     if cents is not None:
         # pre-trained half-quantizers (the train-once-serve-many
         # split; qs26 passes the memoized 'imi:' model here)
@@ -3388,68 +3203,26 @@ def cosine_topk_imi_blas(
             tpts, h, k=k_each, n_iter=n_iter
         )
     if blas_assign:
-        import numpy as np
-
-        qscale = float(_ASSIGN_QSCALE)
-        r1 = sorted((r["cid"], list(r["c"])) for r in cent1.collect())
-        r2 = sorted((r["cid"], list(r["c"])) for r in cent2.collect())
-        C1 = np.asarray([c for _, c in r1], dtype="float64")
-        cids1 = np.asarray([cid for cid, _ in r1], dtype="int64")
-        C2 = np.asarray([c for _, c in r2], dtype="float64")
-        cids2 = np.asarray([cid for cid, _ in r2], dtype="int64")
-        if quant:
-            C1 = np.floor(C1 * qscale + 0.5)
-            C2 = np.floor(C2 * qscale + 0.5)
-        if raw:
-            # raw float32 in, raw float32 through to the packed blocks
-            # (half the assignment-boundary + packing-shuffle bytes);
-            # the kernel replays _unit_vectors' chain bit-exactly and
-            # the search kernel re-normalizes the same way (raw=True)
-            vec_t = df.schema[vec_col].dataType.simpleString()
-            pts = df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism
-            ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("u"))
-        else:
-            vec_t = "array<double>"
-            pts = _unit_vectors(df, id_col, vec_col)
-
-        def _assign(batches):
-            import numpy as _np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                U = _np.stack(
-                    [_np.asarray(u, dtype="float64") for u in pdf["u"]]
-                )
-                if raw:
-                    # _unit_vectors' bits: sequential fold norm, then
-                    # one exact division per element
-                    p = U * U
-                    acc = p[:, 0] + 0.0
-                    for i in range(1, p.shape[1]):
-                        acc = acc + p[:, i]
-                    U = U / _np.sqrt(acc)[:, None]
-                S = _np.floor(U * qscale + 0.5) if quant else U
-                b1 = cids1[_np.argmax(S[:, :h] @ C1.T, axis=1)]
-                b2 = cids2[_np.argmax(S[:, h:] @ C2.T, axis=1)]
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "u": pdf["u"], "cid1": b1, "cid2": b2}
-                )
-
-        import pandas as pd  # noqa: F401 — worker-side dependency
-
-        asg = pts.mapInPandas(
-            _assign,
-            schema=f"id long, u {vec_t}, cid1 long, cid2 long",
+        # raw: float32 in, float32 through to the packed blocks (half
+        # the assignment-boundary + packing-shuffle bytes); both
+        # kernels unit-normalize with _fold_unit
+        src = (
+            _kernel_source(df, id_col, vec_col, raw=True)
+            if raw
+            else _kernel_source(_unit_vectors(df, id_col, vec_col), "id", "u", False)
         )
+        halves = {
+            "cid1": (slice(None, h), *_collect_model(cent1, quant)),
+            "cid2": (slice(h, None), *_collect_model(cent2, quant)),
+        }
+        cells = _assign_blas(src, halves, quant, raw, keep_v=True)
     else:
-        asg = imi_assign(_unit_vectors(df, id_col, vec_col), cent1, cent2, h)
-    packed = asg.select(
-        "cid1", "cid2", F.struct(F.col("id"), F.col("u").alias("v")).alias("item")
-    ).groupBy("cid1", "cid2").agg(F.collect_list("item").alias("items"))
-    combos = packed.select(
-        F.col("items").alias("q_items"), F.col("items").alias("d_items")
+        cells = imi_assign(
+            _unit_vectors(df, id_col, vec_col), cent1, cent2, h
+        ).withColumnRenamed("u", "v")
+    return _blas_topk_from_combos(
+        _cell_combos(cells, ["cid1", "cid2"]),
+        k_neighbors,
+        quant=quant,
+        raw=raw and blas_assign,
     )
-    return _blas_topk_from_combos(combos, k_neighbors, quant=quant, raw=pack_raw)

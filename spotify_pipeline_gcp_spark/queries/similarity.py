@@ -4000,12 +4000,6 @@ def qs28_cosine_topk_imi_multiprobe_blas(
         nprobe_each=2,
         cents=cents,
         quant=True,
-        # only consumed by the probe_kernel=False fold escape path:
-        # bounds the tagged scored stream's per-task sorter slice —
-        # the 2 M-row rung died without it (see _topn_probe_ranks_halves).
-        # The default bit-exact kernel path computes probes row-locally
-        # and needs no sorter guard (_topn_probe_ranks_halves_blas).
-        work_rows=n * 2 * k_each,
     ).withColumnRenamed("cosine", "cosine_q")
 
 

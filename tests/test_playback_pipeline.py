@@ -56,6 +56,9 @@ def test_bag_artists_sorted_csv(raw_playback):
     assert duet.artist_ids == "a3, a2"
     solo = bags[("2026-08-12T08:00:00.000Z", "t1")]
     assert solo.artist_names == "Solo Artist"
+    # a play listed twice in one document (edge 3) is bagged once
+    dup = bags[("2026-08-12T10:00:00.000Z", "t3")]
+    assert (dup.artist_names, dup.artist_ids) == ("Solo Artist", "a1")
 
 
 def test_playback_hist_grain_and_contract(raw_playback):

@@ -1059,18 +1059,11 @@ def test_probe_kernel_bit_exact_vs_fold(spark):
     blas = snap(_topn_probe_ranks_halves_blas(pts, cent1, cent2, h, 2))
     assert fold == blas and len(fold) > 0
 
-    # with_u/cids_only (qs28's shape) must select the same probe cids
-    # in the same rank order AND pass u through bit-losslessly
-    withu = _topn_probe_ranks_halves_blas(
-        pts, cent1, cent2, h, 2, with_u=True, cids_only=True
-    )
+    # with_u (qs28's shape) must select the same probes in the same
+    # rank order AND pass u through bit-losslessly
+    withu = _topn_probe_ranks_halves_blas(pts, cent1, cent2, h, 2, with_u=True)
     wu_rows = withu.collect()
-    cid_seq = {r["id"]: (list(r["t1"]), list(r["t2"])) for r in wu_rows}
-    fold_cids = {
-        i: ([c for _, c in t1], [c for _, c in t2])
-        for i, (t1, t2) in fold.items()
-    }
-    assert cid_seq == fold_cids
+    assert snap(withu) == fold
     src_u = {r["id"]: [repr(x) for x in r["u"]] for r in pts.collect()}
     ker_u = {r["id"]: [repr(x) for x in r["u"]] for r in wu_rows}
     assert ker_u == src_u
@@ -1437,9 +1430,9 @@ def test_ivfpq_encode_raw_bit_equal_jvm_unit(spark):
 
 def test_scan_bytes_est_guard_and_block_sizing(spark):
     # r15: the packed-BLAS block count derives from the optimizer's
-    # file-backed size estimate — positive for (projections/filters
-    # over) bare scans, None for derived frames (whose estimates can
-    # be wrong by orders of magnitude), and the derived default never
+    # file-backed size estimate — positive for (projections over)
+    # bare scans, None for derived frames (whose estimates can be
+    # wrong by orders of magnitude), and the derived default never
     # changes output rows vs an explicit block count.
     from pyspark.sql import functions as F
 
@@ -1452,8 +1445,10 @@ def test_scan_bytes_est_guard_and_block_sizing(spark):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     est = _scan_bytes_est(emb)
     assert est is not None and est > 0
-    # projections/filters keep the estimate; aggregates lose it
-    assert _scan_bytes_est(emb.where(F.col("label") % 2 == 0)) is not None
+    # projections keep the estimate; filters (whose estimate is the
+    # unfiltered scan size without CBO) and aggregates lose it
+    assert _scan_bytes_est(emb.select("vec_id", "embedding")) is not None
+    assert _scan_bytes_est(emb.where(F.col("label") % 2 == 0)) is None
     assert _scan_bytes_est(emb.groupBy("label").count()) is None
     # block count is a pure execution knob: derived default == any
     # explicit count, row for row (quant scores are integer-exact, so
@@ -1470,3 +1465,81 @@ def test_scan_bytes_est_guard_and_block_sizing(spark):
         ).collect()
     }
     assert want == got
+
+
+def test_fold_unit_bit_equal_unit_vectors(spark):
+    """``_fold_unit`` — the one NumPy replay of ``_unit_vectors``' chain
+    that every raw-path kernel normalizes with — must reproduce the JVM
+    fold's doubles BIT-FOR-BIT on adversarial float32 rows: a leading
+    -0.0, subnormal and near-float32-max components, d=1, and wide
+    exponent spreads at d=64."""
+    import numpy as np
+
+    from spotify_pipeline_gcp_spark.operators.similarity import (
+        _fold_unit,
+        _unit_vectors,
+    )
+
+    f32 = np.finfo(np.float32)
+    tiny, big = float(f32.smallest_subnormal), float(f32.max)
+    rng = np.random.default_rng(7)
+    wide = rng.standard_normal((8, 64)) * 10.0 ** rng.uniform(-40, 37, (8, 64))
+    groups = [
+        [
+            [-0.0, 1.0, 2.0],
+            [-0.0, -0.0, 3.0],
+            [tiny, 2 * tiny, 1.0],
+            [tiny, tiny, 5 * tiny],
+            [big, -big, 1.0],
+            [1e30, 3.0, -7e-30],
+        ],
+        [[-3.5], [tiny], [big], [1e-40]],
+        wide.tolist(),
+    ]
+    for rows in groups:
+        mat32 = np.asarray(rows, dtype="float32")
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in r]) for i, r in enumerate(mat32)],
+            "vec_id long, embedding array<float>",
+        )
+        jvm = {
+            r["id"]: r["u"]
+            for r in _unit_vectors(emb, "vec_id", "embedding").collect()
+        }
+        want = np.asarray([jvm[i] for i in range(len(rows))], dtype="float64")
+        got = _fold_unit(mat32.astype("float64"))
+        assert np.array_equal(want.view(np.int64), got.view(np.int64)), rows
+
+
+def test_blas_queries_from_foreign_cwd_vanilla_session(tmp_path):
+    """qs4 and qs26 through ``__spark_entry__.queries()`` from a vanilla
+    SparkSession, a foreign cwd and no PYTHONPATH — the driver's setup.
+    Their kernels call module-level helpers that cloudpickle ships by
+    reference, so this fails unless the operators ship the package to
+    the Python workers themselves."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+import __spark_entry__ as entry
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+for name in ("qs4_cosine_topk_blas", "qs26_cosine_topk_imi_blas"):
+    rows = entry.queries()[name](spark, entry.SMOKE_SF_DIR).count()
+    assert rows > 0, name
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
